@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.Trigger
   * (secrets scrub + quality gate + incremental minhash dedup, index
   * maintained in-stream) in `nTriggers` micro-batches, then runs the
   * IDENTICAL one-shot batch screen in the same JVM — the
-  * `stream_over_batch_ratio` is the box-independent figure (the
-  * StreamBench calibration stance: absolute doc/s swings 2-3× with
+  * `stream_over_batch_ratio` is the box-independent figure (a
+  * same-JVM calibration: absolute doc/s swings 2-3× with
   * host load the guest cannot see; the same-minutes ratio prices
   * exactly what streaming adds).
   *

@@ -280,14 +280,10 @@ object IdempotentSink {
     }
     if (currentManifest().isEmpty) {
       val genDir = new Path(batchStaging, s"g$gen")
-      val tStage = System.nanoTime()
       OcsfSink.partitionedFrame(df, region, accountId, filesPerDay).write
         .mode("overwrite")
         .partitionBy("region", "accountId", "eventDay")
         .parquet(genDir.toString)
-      if (sys.env.contains("GRAFT_SINK_TIMING"))
-        System.err.println(s"[graft-timing] $route $pair stage " +
-          s"${(System.nanoTime() - tStage) / 1000000} ms")
       val entries = listRelative(fs, genDir)
         .map { case (rel, len) => (s"g$gen/$rel", len) }
       lockFor(key).synchronized {
@@ -307,15 +303,11 @@ object IdempotentSink {
       }
       val entries = currentManifest().getOrElse(throw new IllegalStateException(
         s"manifest unreadable after publish: $manifest (route=$route batch=$pair)"))
-      val tPromote = System.nanoTime()
       entries.foreach { case (rel, len) =>
         promoteOne(fs, batchStaging, tableDir, rel, len, route, pair)
       }
       writeAtomic(fs, committed, "")
       fs.delete(batchStaging, true)
-      if (sys.env.contains("GRAFT_SINK_TIMING"))
-        System.err.println(s"[graft-timing] $route $pair promote " +
-          s"${(System.nanoTime() - tPromote) / 1000000} ms (${entries.size} files)")
       evict(key)
     }
     ()

@@ -1,7 +1,14 @@
 package graft.ocsf
 
+import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Security-Lake-layout parquet sink (SURVEY.md §2 A22–A23).
   *
@@ -60,12 +67,13 @@ object OcsfSink {
     autoFilesPerDayFromBytes(
       df.queryExecution.optimizedPlan.stats.sizeInBytes, targetChunkBytes)
 
-  /** The same sizing from an already-known byte estimate — what the
-    * streaming fan-out uses: reading `optimizedPlan.stats` off each
+  /** The same sizing from an already-known byte estimate — what every
+    * fan-out uses ([[fanOutRoutes]]): reading `optimizedPlan.stats` off each
     * route's NORMALIZED plan runs a full optimizer pass per route per
     * micro-batch (measured ~5 s of driver time per 1M-event trigger
     * across the 13 routes), while the materialized batch cache already
-    * knows its size. One stats read per batch, divided across routes. */
+    * knows its size. One stats read per batch, split by each route's
+    * share of the rows ([[routeFilesPerDay]]). */
   def autoFilesPerDayFromBytes(est: BigInt,
                                targetChunkBytes: Long = 512L << 20): Int =
     (est / targetChunkBytes).min(BigInt(4096)).max(BigInt(1)).toInt
@@ -118,8 +126,8 @@ object OcsfSink {
     * Every route write then filters `route === r` against the cache,
     * and `InMemoryTableScan` prunes whole batches via its per-batch
     * min/max stats: a 13-way fan-out decompresses ~1× the data instead
-    * of 13×. Measured (EtlAb, 1M events, median-of-3 interleaved
-    * arms): fan-out 19.6 s plain → 10.2 s clustered, total 22.5 →
+    * of 13×. Measured (1M events, median-of-3 interleaved A/B arms,
+    * BASELINE.md): fan-out 19.6 s plain → 10.2 s clustered, total 22.5 →
     * 13.4 s; the no-shuffle alternative (`sortWithinPartitions` +
     * small cache batches) recovered only ~2.6 s of that.
     *
@@ -172,11 +180,10 @@ object OcsfSink {
     * streaming path sizes batches with `maxFilesPerTrigger`, but the
     * cache must stay safe when a backfill batch blows past the cap. */
   def cacheForFanOut(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    df.persist(StorageLevel.MEMORY_AND_DISK_SER)
 
-  /** Admission control for the fan-out (the `maxConcurrentRoutes = 0`
-    * auto-size): how many route WRITE JOBS may run at once before the
-    * next one queues on the bounded pool.
+  /** Admission control for the fan-out: how many route WRITE JOBS may
+    * run at once before the next one queues on the bounded pool.
     *
     * Why it exists: every open parquet writer buffers up to a full row
     * group (`parquet.block.size`, default 128 MB) of UNTRACKED heap —
@@ -233,9 +240,9 @@ object OcsfSink {
     * are independent Spark jobs and run CONCURRENTLY — sequential
     * submission left the cluster idle between small jobs and made the
     * fan-out latency the sum instead of the max. Cache `classified`
-    * first (as EtlBench/demos do) so the scan isn't re-run per route —
-    * ideally [[routeClustered]] first, so each route's rescan prunes
-    * to its own cache batches. */
+    * ([[cacheForFanOut]]) after [[routeClustered]], so each route's
+    * rescan prunes to its own cache batches; an uncached input is
+    * cached for the fan-out's duration ([[fanOutRoutes]]). */
   def fanOut(classified: DataFrame, baseDir: String,
              region: String, accountId: String): Unit = {
     fanOutTimed(classified, baseDir, region, accountId)
@@ -244,40 +251,13 @@ object OcsfSink {
 
   /** [[fanOut]] that also reports per-route wall seconds (measured
     * inside each route's future, so contention between the concurrent
-    * writes is included — the number a capacity plan needs).
-    *
-    * `filesPerDay` (default 0 = auto-size) is the write-parallelism
-    * lever fanned out to every route's [[write]]. The auto default
-    * optimizes for file hygiene: a small batch gets ONE file per
-    * (route, day) — which also means ONE parquet-encoding core per
-    * route, 13 busy cores on a 32-core box. When fan-out LATENCY
-    * matters more than file count (tight streaming triggers, bench),
-    * pass ~`cores / 13` so the concurrent route jobs can use the whole
-    * machine; the day's files stay `filesPerDay × routes`, bounded. */
-  /** `maxConcurrentRoutes` is the write-buffer admission lever
-    * (0 = auto via [[autoConcurrentRoutes]]): route jobs past the cap
-    * queue on the bounded pool instead of stacking parquet buffers. */
+    * writes is included — the number a capacity plan needs). */
   def fanOutTimed(classified: DataFrame, baseDir: String,
-                  region: String, accountId: String,
-                  filesPerDay: Int = 0,
-                  maxConcurrentRoutes: Int = 0): Map[String, Double] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val routed = Normalizers.normalizeAll(classified).toSeq
-    val width =
-      if (maxConcurrentRoutes > 0) math.min(routed.size, maxConcurrentRoutes)
-      else autoConcurrentRoutes(classified, filesPerDay, routed.size)
-    withFanOutPool(width, "graft-fanout") { implicit ec =>
-      val jobs = routed.map { case (route, df) =>
-        Future {
-          val t0 = System.nanoTime()
-          write(df, baseDir, route, region, accountId, filesPerDay)
-          route -> (System.nanoTime() - t0) / 1e9
-        }
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf).toMap
-    }
-  }
+                  region: String, accountId: String): Map[String, Double] =
+    fanOutRoutes(classified, OcsfMappings.routes, Duration.Inf, "fan-out") {
+      (df, route, filesPerDay) =>
+        write(df, baseDir, route, region, accountId, filesPerDay)
+    }.routeS
 
   /** [[fanOut]] with restart safety: each route lands through
     * [[IdempotentSink.writeBatch]] keyed by a caller-chosen `runId`
@@ -296,21 +276,138 @@ object OcsfSink {
     * `compactCommits(foldWriters = Set(writerId))`. */
   def fanOutIdempotent(classified: DataFrame, baseDir: String,
                        region: String, accountId: String,
-                       runId: Long, writerId: String = "",
-                       maxConcurrentRoutes: Int = 0): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val routed = Normalizers.normalizeAll(classified).toSeq
-    val width =
-      if (maxConcurrentRoutes > 0) math.min(routed.size, maxConcurrentRoutes)
-      else autoConcurrentRoutes(classified, filesPerDay = 1, routed.size)
-    withFanOutPool(width, "graft-fanout-idem") { implicit ec =>
-      val jobs = routed.map { case (route, df) =>
-        Future(IdempotentSink.writeBatch(df, baseDir, route, region,
-          accountId, runId, writerId = writerId))
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf)
+                       runId: Long, writerId: String = ""): Unit = {
+    fanOutRoutes(classified, OcsfMappings.routes, Duration.Inf, "fan-out") {
+      (df, route, filesPerDay) =>
+        IdempotentSink.writeBatch(df, baseDir, route, region, accountId,
+          runId, filesPerDay, writerId)
     }
     ()
+  }
+
+  /** Per-route wall seconds of a fan-out, after the one job that
+    * materialized its input (`materializeS`). */
+  private[graft] final case class FanOutTimes(materializeS: Double,
+                                              routeS: Map[String, Double])
+
+  /** The one fan-out routine behind [[fanOutTimed]],
+    * [[fanOutIdempotent]] and the streaming fan-out
+    * ([[graft.streaming.EventStream.start]]).
+    *
+    * First ONE job materializes the input and counts its rows per
+    * route (skipped when the caller already built a cache too small
+    * for a second writer on any route). An uncached input is cached ([[cacheForFanOut]]) for the
+    * fan-out's duration, so the routes never rescan its source. The one
+    * job also matters for a cached one: concurrent scans of an
+    * UNmaterialized persist each recompute the partitions they race to
+    * (CacheManager stores first-writer-wins but does not block the
+    * losers), so without it the fan-out pays up to routes× the
+    * shuffle-read + columnar-unroll cost. Both sizing decisions then
+    * come from the cache's real bytes, never a plan estimate:
+    *  - each route's `filesPerDay` from its own share of those bytes
+    *    ([[routeFilesPerDay]]), so a heavy route gets more writers
+    *    than a light one;
+    *  - the admission width ([[autoConcurrentRoutes]]) for the heaviest
+    *    route's `filesPerDay`.
+    *
+    * Each route's `Normalizers.byRoute` relation goes to `writeRoute`
+    * (route, filesPerDay) through [[runRoutes]], which bounds the wait
+    * by `timeout` (`what` prefixes its message). */
+  private[graft] def fanOutRoutes(classified: DataFrame, routes: Seq[String],
+                                  timeout: Duration, what: String)(
+      writeRoute: (DataFrame, String, Int) => Unit): FanOutTimes = {
+    val owned = classified.storageLevel == StorageLevel.NONE
+    val cached = if (owned) cacheForFanOut(classified) else classified
+    // a fresh plan each time: `cached`'s own optimized plan may predate
+    // the persist, and only a plan over the InMemoryRelation reports the
+    // built batches' bytes
+    def sized = cached.where(lit(true))
+    def cacheBytes = sized.queryExecution.optimizedPlan.stats.sizeInBytes
+    try {
+      val t0 = System.nanoTime()
+      // a cache the caller already built, too small for a second writer
+      // on any route, needs neither the job nor the per-route counts
+      val rows =
+        if (built(cached) && autoFilesPerDayFromBytes(cacheBytes) == 1) Map.empty[String, Long]
+        else cached.groupBy("route").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val materializeS = (System.nanoTime() - t0) / 1e9
+      val filesPerDay = routeFilesPerDay(cacheBytes, rows, routes)
+      val width = autoConcurrentRoutes(sized,
+        (1 +: filesPerDay.values.toSeq).max, math.max(1, routes.size))
+      FanOutTimes(materializeS, runRoutes(routes, width, timeout, what) { route =>
+        writeRoute(Normalizers.byRoute(route)(cached.filter(col("route") === route)),
+          route, filesPerDay(route))
+      })
+    } finally if (owned) { cached.unpersist(); () }
+  }
+
+  /** Whether `df` is cached and its cache already built. */
+  private def built(df: DataFrame): Boolean =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+
+  /** Each route's writers per (region, account, day):
+    * [[autoFilesPerDayFromBytes]] of its share of `cacheBytes`, the
+    * share being its row count over all rows in the cache. */
+  private[ocsf] def routeFilesPerDay(cacheBytes: BigInt, rows: Map[String, Long],
+                                     routes: Seq[String]): Map[String, Int] = {
+    val total = math.max(1L, rows.values.sum)
+    routes.map(r =>
+      r -> autoFilesPerDayFromBytes(cacheBytes * BigInt(rows.getOrElse(r, 0L)) / total)).toMap
+  }
+
+  /** Runs `run(route)` for every route on a [[withFanOutPool]] of
+    * `width` threads and returns per-route wall seconds (measured on
+    * the route's thread, so contention between concurrent routes is
+    * included). The first `width` routes take a thread at once; the
+    * rest queue for one.
+    *
+    * If any route fails, or the routes have not all finished within
+    * `timeout`, the routes still queued are cancelled and never start: the caller
+    * is about to fail the batch (and may drop the cache the routes
+    * read). Routes already running are abandoned, not interrupted; a
+    * timeout's `TimeoutException` names them as stuck and lists the
+    * cancelled ones apart. */
+  private[ocsf] def runRoutes(routes: Seq[String], width: Int, timeout: Duration,
+                              what: String)(run: String => Unit): Map[String, Double] = {
+    val (queued, running, finished, cancelled) = (0, 1, 2, 3)
+    // a route past the first `width` waits in the pool's queue until it
+    // claims queued → running; cancelling claims queued → cancelled
+    val state = routes.indices.map(i =>
+      new AtomicInteger(if (i < width) running else queued))
+    withFanOutPool(width, "graft-fanout") { pool =>
+      val jobs = routes.indices.map { i =>
+        Future {
+          if (state(i).compareAndSet(queued, running) || state(i).get == running) {
+            val t0 = System.nanoTime()
+            try run(routes(i)) finally state(i).set(finished)
+            (System.nanoTime() - t0) / 1e9
+          } else 0.0
+        }(pool)
+      }
+      // sequenced on the completing thread, not the pool: an abandoned
+      // route that finishes after the pool shut down must not need it
+      implicit val sequencing: ExecutionContext = ExecutionContext.parasitic
+      val secs =
+        try Await.result(Future.sequence(jobs), timeout)
+        catch {
+          case e: Throwable =>
+            val dropped = routes.indices.filter(state(_).compareAndSet(queued, cancelled))
+            e match {
+              case _: TimeoutException =>
+                val stuck = routes.indices.filter(state(_).get == running)
+                throw new TimeoutException(
+                  s"$what exceeded $timeout; stuck routes: " +
+                    stuck.map(routes).mkString(", ") +
+                    (if (dropped.isEmpty) ""
+                     else s"; cancelled before start: ${dropped.map(routes).mkString(", ")}"))
+              case _ => throw e
+            }
+        }
+      routes.zip(secs).toMap
+    }
   }
 }

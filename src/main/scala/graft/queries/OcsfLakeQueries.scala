@@ -7,7 +7,6 @@ import java.util.zip.GZIPOutputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.EtlBench
 import graft.ocsf.{OcsfSink, OcsfTables}
 import graft.sources.FdrSource
 
@@ -24,7 +23,7 @@ import graft.sources.FdrSource
   * [[OcsfLake.ensure]] materializes a deterministic miniature lake at a
   * FIXED path ([[OcsfLake.Root]]) by running the full ETL (gz JSON-lines
   * → classify → 13 normalizers → partitioned fan-out) over the
-  * deterministic [[graft.EtlBench.line]] corpus. The path must be a
+  * deterministic [[OcsfLake.line]] corpus. The path must be a
   * compile-time constant because [[oracleSql]] strings embed it — the
   * driver's DuckDB session only gets views of the star-schema tables,
   * so the lake is addressed by `read_parquet('<Root>/<table>/⋆⋆/⋆.parquet')`
@@ -41,11 +40,32 @@ object OcsfLake {
   /** 10k events per route. */
   val NEvents = 130000L
 
-  /** Index stride into [[EtlBench.line]]: coprime with 13 so the routes
+  /** Index stride into [[line]]: coprime with 13 so the routes
     * keep cycling, and ~1.7 s of event-time per line so the corpus
     * spans 4 UTC eventDays (exercises partition pruning, which a
     * single-day lake cannot). */
   val Stride = 1663L
+
+  /** Deterministic synthetic FDR lines cycling through event shapes
+    * that exercise every sink route. */
+  def line(i: Long): String = {
+    val ts = 1700000000000L + i
+    (i % 13) match {
+      case 0 => s"""{"event_simpleName":"ProcessRollup2","name":"ProcessRollup2V19","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","aip":"10.0.${i % 256}.${(i / 256) % 256}","timestamp":"$ts","event_platform":"Win","ImageFileName":"C:\\\\W\\\\cmd$i.exe","CommandLine":"cmd /c job $i","SHA256HashData":"${i}a","RawProcessId":"${1000 + i % 50000}","ParentBaseFileName":"explorer.exe"}"""
+      case 1 => s"""{"event_simpleName":"NetworkConnectIP4","name":"NetworkConnectIP4V10","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Lin","LocalPort":"${1024 + i % 60000}","RemotePort":"443","RemoteAddressIP4":"93.184.${i % 256}.${(i / 7) % 256}","LocalAddressIP4":"10.0.0.${i % 256}","ConnectionDirection":"${i % 4}"}"""
+      case 2 => s"""{"event_simpleName":"DnsRequest","name":"DnsRequestV4","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Mac","DomainName":"host${i % 5000}.example.com","ContextBaseFileName":"proc${i % 11}"}"""
+      case 3 => s"""{"event_simpleName":"UserLogon","name":"UserLogonV10","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Win","UserName":"user${i % 500}","UserSid":"S-1-5-$i","LogonType":"${2 + i % 11}","UserIsAdmin":"${i % 2}"}"""
+      case 4 => s"""{"event_simpleName":"HttpRequest","name":"HttpRequestV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Lin","HttpMethod":"${1 + i % 8}","HttpHost":"api${i % 31}.example.com","HttpPath":"/v1/r/$i","HttpStatus":"${if (i % 9 == 0) 404 else 200}"}"""
+      case 5 => s"""{"event_simpleName":"NewScriptWritten","name":"NewScriptWrittenV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Lin","TargetFileName":"/tmp/s$i.sh","TargetDirectoryName":"/tmp","UserName":"svc${i % 17}","ContentSHA256HashData":"${i}b"}"""
+      case 6 => s"""{"event_simpleName":"KextLoad","name":"KextLoadV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Mac","BundleID":"com.example.k${i % 29}","ImageFileName":"/L/E/k$i.kext","SHA256HashData":"${i}c"}"""
+      case 7 => s"""{"event_simpleName":"InstalledApplication","name":"InstalledApplicationV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Win","UpdateFlag":"${i % 6}","AppName":"App${i % 200}","AppVendor":"Vendor${i % 40}","AppVersion":"1.${i % 30}"}"""
+      case 8 => s"""{"event_simpleName":"InstalledUpdates","name":"InstalledUpdatesV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Win","Status":"${i % 2}","InstalledUpdateIds":"KB${i};KB${i + 1}"}"""
+      case 9 => s"""{"event_simpleName":"LFODownloadConfirmation","name":"LFODownloadConfirmationV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Win","SourceFileName":"f$i.bin","SHA256HashData":"${i}d","DownloadServer":"lfo${i % 7}.example.com","DownloadPort":"443"}"""
+      case 10 => s"""{"event_simpleName":"ScriptControlDetectInfo","name":"ScriptControlDetectInfoV1","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Win","ImageFileName":"ps$i.exe","CommandLine":"ps -enc $i","ContentSHA256HashData":"${i}e","ContextProcessId":"$i","ParentImageFileName":"cmd.exe"}"""
+      case 11 => s"""{"event_simpleName":"SensorHeartbeat","name":"SensorHeartbeatV4","aid":"aid-$i","cid":"cid-${i % 97}","id":"e-$i","timestamp":"$ts","event_platform":"Win","ConfigBuild":"1007.${i % 10}"}"""
+      case _ => s"""{"event_simpleName":"Event_ExternalApiEvent","ExternalApiType":"Event_AuthActivityAuditEvent","UTCTimestamp":"${ts / 1000}","UserIp":"9.9.${i % 256}.9","AgentIdString":"aid-$i","cid":"cid-${i % 97}","UserId":"u$i@example.com","CustomerIdString":"cust-${i % 5}","AuditKeyValues":[{"Key":"request_method","ValueString":"GET"},{"Key":"status_code","ValueString":"200"},{"Key":"trace_id","ValueString":"t-$i"},{"Key":"request_path","ValueString":"/v1/$i"}]}"""
+    }
+  }
 
   private def marker: Path = Paths.get(Root, s"_GRAFT_LAKE_v$Version")
 
@@ -57,7 +77,7 @@ object OcsfLake {
     val w = new BufferedWriter(new OutputStreamWriter(new GZIPOutputStream(
       new FileOutputStream(landing.resolve("fdr-0000.gz").toFile)), "UTF-8"), 1 << 20)
     var i = 0L
-    while (i < NEvents) { w.write(EtlBench.line(i * Stride)); w.write("\n"); i += 1 }
+    while (i < NEvents) { w.write(line(i * Stride)); w.write("\n"); i += 1 }
     w.close()
     // stale partial lake from an older version/crashed build: rebuild clean
     val rootPath = Paths.get(Root)

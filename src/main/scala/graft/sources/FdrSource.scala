@@ -29,8 +29,15 @@ object FdrSource {
   /** A1 — gz JSON-lines → DataFrame with `raw` (the line) and `fields`
     * (parsed map). Blank lines are dropped. */
   def readJsonLines(spark: SparkSession, path: String): DataFrame =
+    parsed(lines(spark, path))
+
+  private def lines(spark: SparkSession, path: String): DataFrame =
     spark.read.textFile(path).toDF("raw")
-      .filter(length(trim(col("raw"))) > 0)
+
+  /** The one parse of a relation of `raw` lines, batch or streaming:
+    * blank lines dropped, `fields` parsed. */
+  private def parsed(raw: DataFrame): DataFrame =
+    raw.filter(length(trim(col("raw"))) > 0)
       .withColumn("fields", from_json(col("raw"), payloadType))
 
   /** A2 — the reference's 3-key event-name coalesce
@@ -66,14 +73,13 @@ object FdrSource {
   final case class Loaded(classified: DataFrame, quarantined: DataFrame)
 
   def loadWithQuarantine(spark: SparkSession, path: String): Loaded =
-    splitQuarantine(spark,
-      readJsonLines(spark, path).withColumn("event_name", eventName(col("fields"))))
+    splitQuarantine(spark, lines(spark, path))
 
-  /** Shared batch/streaming split: `named` is the parsed relation with
-    * (raw, fields, event_name). The dimension side is a broadcast
-    * static table, so in streaming this is a stream-static join —
-    * fully supported, no state store. */
-  def splitQuarantine(spark: SparkSession, named: DataFrame): Loaded = {
+  /** Shared batch/streaming split of a relation of `raw` lines. The
+    * dimension side is a broadcast static table, so in streaming this
+    * is a stream-static join — fully supported, no state store. */
+  def splitQuarantine(spark: SparkSession, raw: DataFrame): Loaded = {
+    val named = parsed(raw).withColumn("event_name", eventName(col("fields")))
     val mappedNames = OcsfMappings.dimension(spark).select(col("eventName"))
     val good = mappedWithClass(spark, named.filter(col("event_name").isNotNull))
     val quarantined = named
@@ -88,5 +94,9 @@ object FdrSource {
 
   /** Full front-end: raw gz json-lines path → classified events. */
   def load(spark: SparkSession, path: String): DataFrame =
-    mappedWithClass(spark, withEventName(readJsonLines(spark, path)))
+    classify(spark, lines(spark, path))
+
+  /** A relation of `raw` lines (batch or streaming) → classified events. */
+  def classify(spark: SparkSession, raw: DataFrame): DataFrame =
+    mappedWithClass(spark, withEventName(parsed(raw)))
 }

@@ -42,38 +42,28 @@ object EventStream {
   case object Listing extends Discovery
   case object Manifest extends Discovery
 
-  /** Parsed streaming relation (raw, fields, event_name) over the
-    * landing prefix. */
-  private def readNamed(spark: SparkSession, landingDir: String,
-                        discovery: Discovery): DataFrame = {
-    val raw = discovery match {
-      case Listing =>
-        spark.readStream
-          .option("maxFilesPerTrigger", 64)
-          .text(landingDir)
-          .toDF("raw")
-      case Manifest =>
-        spark.readStream
-          .format("graft-landing")
-          .option("maxFilesPerTrigger", 64)
-          .load(landingDir)
-          .select("raw")
-    }
-    raw
-      .filter(length(trim(col("raw"))) > 0)
-      .withColumn("fields", from_json(col("raw"),
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType)))
-      .withColumn("event_name", FdrSource.eventName(col("fields")))
+  /** The streaming relation of `raw` lines over the landing prefix;
+    * parsing is the batch reader's ([[FdrSource]]). */
+  private def readRaw(spark: SparkSession, landingDir: String,
+                      discovery: Discovery): DataFrame = discovery match {
+    case Listing =>
+      spark.readStream
+        .option("maxFilesPerTrigger", 64)
+        .text(landingDir)
+        .toDF("raw")
+    case Manifest =>
+      spark.readStream
+        .format("graft-landing")
+        .option("maxFilesPerTrigger", 64)
+        .load(landingDir)
+        .select("raw")
   }
 
   /** Streaming equivalent of FdrSource.load: gz json-lines →
     * classified events. */
   def readClassified(spark: SparkSession, landingDir: String,
                      discovery: Discovery = Listing): DataFrame =
-    FdrSource.mappedWithClass(spark,
-      readNamed(spark, landingDir, discovery).filter(col("event_name").isNotNull))
+    FdrSource.classify(spark, readRaw(spark, landingDir, discovery))
 
   /** Streaming equivalent of FdrSource.loadWithQuarantine: classified
     * events plus the (raw, reason) quarantine stream. Run the
@@ -82,7 +72,7 @@ object EventStream {
     * dropped — the reference merely logs them from the Lambda. */
   def readWithQuarantine(spark: SparkSession, landingDir: String,
                          discovery: Discovery = Listing): FdrSource.Loaded =
-    FdrSource.splitQuarantine(spark, readNamed(spark, landingDir, discovery))
+    FdrSource.splitQuarantine(spark, readRaw(spark, landingDir, discovery))
 
   /** Lands the quarantine stream as parquet with its own checkpoint. */
   def startQuarantineSink(quarantined: DataFrame, dir: String,
@@ -122,19 +112,24 @@ object EventStream {
     * `batchTimeout` bounds the per-batch wait on the 13 route writes:
     * one wedged write (a stuck remote upload) must FAIL the batch — so
     * the checkpoint retry machinery engages and the stuck route is
-    * named — rather than hang the whole query forever. The timed-out
-    * futures are abandoned, not cancelled; if the query restarts in
+    * named — rather than hang the whole query forever. Routes still
+    * queued for admission are cancelled and never start; the running
+    * ones are abandoned, not interrupted; if the query restarts in
     * the SAME JVM, the replayed batch supersedes them via
     * IdempotentSink's per-(route, batch) generation token — a stale
     * attempt stages into its own generation dir and is fenced off
     * (SupersededAttemptException) at its first control step, so it can
     * never publish a manifest or promote files the replay owns.
     *
-    * The route writes run on a DEDICATED bounded pool (size = routes)
-    * created per batch and shut down when the batch ends — never the
-    * JVM-shared global pool, where two concurrent streams' blocking
-    * parquet writes would starve each other. An abandoned straggler
-    * finishes on its own (daemon) pool thread, then the pool dies.
+    * The route writes go through the same fan-out routine as the batch
+    * path ([[graft.ocsf.OcsfSink.fanOutIdempotent]]): each route's
+    * writers and the admission width are sized once per batch from the
+    * materialized cache's bytes and the route's share of its rows, on
+    * a DEDICATED bounded pool created per batch and shut down
+    * when the batch ends — never the JVM-shared global pool, where two
+    * concurrent streams' blocking parquet writes would starve each
+    * other. An abandoned straggler finishes on its own (daemon) pool
+    * thread, then the pool dies.
     *
     * `compactEvery` > 0 folds each route's per-batch manifest/marker
     * pairs into one via [[IdempotentSink.compactCommits]] every N
@@ -155,20 +150,7 @@ object EventStream {
     * files landed since the last one, and the ingest path keeps
     * [[graft.ocsf.OcsfTables.loadWhere]] pruning current without an
     * external job. Same failure contract as compaction: the index is
-    * advisory, so a failed refresh is logged, never a batch failure.
-    *
-    * `filesPerDay` is [[OcsfSink.write]]'s writer-parallelism lever
-    * fanned out to every route's [[IdempotentSink.writeBatch]]. The
-    * default 0 auto-sizes per batch from the materialized cache's
-    * stats (ONE file per (route, day) at micro-batch scale — the
-    * file-hygiene optimum for a long-running table). Unlike the batch
-    * fan-out (OcsfSink.fanOutTimed's `cores/13 + 1` latency stance),
-    * extra writers do NOT pay off on this path at micro-batch scale —
-    * measured at 1M-event triggers: filesPerDay=3 ran ~25% SLOWER than
-    * 1 (3× staged files through the two-phase commit, 39 concurrent
-    * writers fork-storming the local-FS permission calls) — so only
-    * raise it for backfill-sized batches where a route's slice
-    * genuinely outgrows one writer. */
+    * advisory, so a failed refresh is logged, never a batch failure. */
   def start(spark: SparkSession, landingDir: String, baseDir: String,
             checkpointDir: String, region: String, accountId: String,
             routes: Seq[String] = OcsfMappings.routes,
@@ -176,9 +158,7 @@ object EventStream {
             batchTimeout: Duration = 10.minutes,
             compactEvery: Int = 100,
             statsCols: Seq[String] = Nil,
-            discovery: Discovery = Listing,
-            filesPerDay: Int = 0): StreamingQuery = {
-    import scala.concurrent.{Await, Future}
+            discovery: Discovery = Listing): StreamingQuery = {
     import graft.ocsf.OcsfSink
     readClassified(spark, landingDir, discovery).writeStream
       .queryName("ocsf-fanout")
@@ -196,46 +176,20 @@ object EventStream {
         val tBatch = System.nanoTime()
         val clustered = OcsfSink.cacheForFanOut(
           OcsfSink.routeClustered(batch.drop("raw")))
-        // materialize the cache with ONE job before the 13 route jobs
-        // fork: concurrent scans of an UNmaterialized persist each
-        // recompute the partitions they race to (CacheManager stores
-        // first-writer-wins but does not block the losers), so without
-        // this cut the fan-out pays up to routes× the shuffle-read +
-        // columnar-unroll cost — exactly the classify/fan-out split the
-        // batch path (EtlBench) has always made
-        clustered.count()
-        val tCached = System.nanoTime()
-        // auto writer sizing from the MATERIALIZED cache's stats, once
-        // per batch and divided across routes — never the per-route
-        // autoFilesPerDay, whose optimizer-stats pass over 13 normalized
-        // plans costs ~5 s of driver time per 1M-event trigger
-        val fpd =
-          if (filesPerDay > 0) filesPerDay
-          else OcsfSink.autoFilesPerDayFromBytes(
-            clustered.queryExecution.optimizedPlan.stats.sizeInBytes /
-              math.max(1, routes.size))
-        try OcsfSink.withFanOutPool(routes.size, "graft-stream-fanout") { implicit ec =>
-          val jobs = routes.map { route =>
-            route -> Future(IdempotentSink.writeBatch(
-              Normalizers.byRoute(route)(clustered.filter(col("route") === route)),
-              baseDir, route, region, accountId, batchId,
-              filesPerDay = fpd))
-          }
-          try Await.result(Future.sequence(jobs.map(_._2)), batchTimeout)
-          catch {
-            case _: concurrent.TimeoutException =>
-              val stuck = jobs.collect { case (r, f) if !f.isCompleted => r }
-              throw new java.util.concurrent.TimeoutException(
-                s"fan-out batch $batchId exceeded $batchTimeout; " +
-                  s"stuck routes: ${stuck.mkString(", ")}")
+        try {
+          val times = OcsfSink.fanOutRoutes(clustered, routes, batchTimeout,
+            s"fan-out batch $batchId") { (df, route, filesPerDay) =>
+            IdempotentSink.writeBatch(df, baseDir, route, region, accountId,
+              batchId, filesPerDay)
           }
           // one line per trigger (bounded, StreamMetrics-style): the
           // cache/fan-out split is the first thing a latency
           // investigation needs and Spark's progress only reports the
           // undivided addBatch total
+          val cacheMs = (times.materializeS * 1000).toLong
           System.err.println(s"[graft] fanout batch $batchId: " +
-            s"cache ${(tCached - tBatch) / 1000000} ms, " +
-            s"routes ${(System.nanoTime() - tCached) / 1000000} ms")
+            s"cache $cacheMs ms, routes " +
+            s"${(System.nanoTime() - tBatch) / 1000000 - cacheMs} ms")
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
             val conf = spark.sessionState.newHadoopConf()
             routes.foreach { route =>
@@ -264,7 +218,6 @@ object EventStream {
                 }
             }
           }
-          ()
         } finally { clustered.unpersist(); () }
       }
       .start()

@@ -310,4 +310,60 @@ class OcsfPipelineSpec extends SparkSpec {
       nRoutes = 13)
     assert(width >= 1 && width <= 13)
   }
+
+  test("A23: each route's writers follow its own share of the batch") {
+    val G = 1L << 30
+    // the 32M-event backfill shape: a 6 GB cache, Zipf(1.1) over 13 routes
+    val routes = OcsfMappings.routes
+    val rows = routes.zipWithIndex.map { case (r, k) =>
+      r -> (1e6 * math.pow(k + 1, -1.1)).toLong }.toMap
+    val fpd = OcsfSink.routeFilesPerDay(BigInt(6 * G), rows, routes)
+    // the heaviest route holds ~35% (2.1 GB): 4 writers; the light ones 1
+    assert(fpd(routes.head) == 4, fpd.toString)
+    assert(fpd(routes.last) == 1, fpd.toString)
+    assert(routes.map(fpd).sliding(2).forall(p => p(0) >= p(1)), fpd.toString)
+    // a route with no rows in the batch still gets one writer
+    assert(OcsfSink.routeFilesPerDay(BigInt(G), Map("a" -> 10L), Seq("a", "b")) ==
+      Map("a" -> 2, "b" -> 1))
+  }
+
+  test("A23: a timed-out fan-out cancels its queued routes, names the running one") {
+    import scala.concurrent.duration.DurationInt
+    import scala.jdk.CollectionConverters._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ex = intercept[java.util.concurrent.TimeoutException] {
+      OcsfSink.runRoutes(Seq("a", "b", "c"), width = 1, 200.millis, "fan-out") { r =>
+        started.add(r); Thread.sleep(1000)
+      }
+    }
+    assert(ex.getMessage.endsWith("stuck routes: a; cancelled before start: b, c"),
+      ex.getMessage)
+    // once `a` finishes its thread is free: a queued route would start now
+    Thread.sleep(2000)
+    assert(started.asScala.toSeq == Seq("a"))
+    // without a timeout every route runs, `width` at a time
+    val secs = OcsfSink.runRoutes(Seq("a", "b", "c"), width = 2, 1.minute, "fan-out")(_ => ())
+    assert(secs.keySet == Set("a", "b", "c"))
+  }
+
+  test("A23: an uncached fan-out input is sized from its cache, then released") {
+    import scala.concurrent.duration.DurationInt
+    val dir = Files.createTempDirectory("fdr-uncached")
+    // uncompressed, so the scan's size estimate is the lines' own bytes
+    Files.write(dir.resolve("part-0001.json"),
+      String.join("\n", Seq.fill(500)(fixtureLines).flatten: _*).getBytes("UTF-8"))
+    val input = FdrSource.load(spark, dir.toString)
+    // unmaterialized, the classify join reports a product estimate far
+    // above the few MB these 3,500 events cache to
+    assert(input.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(13L * (512L << 20)))
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
+    OcsfSink.fanOutRoutes(input, OcsfMappings.routes, 2.minutes, "fan-out") {
+      (df, route, filesPerDay) => seen.put(route, (filesPerDay, df.count())); ()
+    }
+    assert(seen.size == 13)
+    assert(seen.values.stream().allMatch(_._1 == 1), seen.toString)
+    assert(seen.values.stream().mapToLong(_._2).sum() == 3500L)
+    assert(input.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
 }

@@ -107,6 +107,93 @@ class EventStreamSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/network_activity").count() == 1)
   }
 
+  /** Committed rows per (route, eventDay) and data files per
+    * (route, eventDay) of every route table under `out`. */
+  private def layout(out: Path): (Map[(String, String), Long], Map[(String, String), Int]) = {
+    val tables = graft.ocsf.OcsfMappings.routes.map(r =>
+      r -> graft.ocsf.OcsfTables.load(spark, out.toString, r))
+    val rows = tables.flatMap { case (r, df) =>
+      df.groupBy(col("eventDay").cast("string")).count().collect()
+        .map(x => (r, x.getString(0)) -> x.getLong(1))
+    }.toMap
+    val day = "eventDay=(\\d+)".r
+    val files = tables.flatMap { case (r, df) =>
+      df.inputFiles.toSeq.map(f => (r, day.findFirstMatchIn(f).get.group(1)))
+    }.groupBy(identity).view.mapValues(_.size).toMap
+    (rows, files)
+  }
+
+  /** Two gz objects of the deterministic lake corpus: every route, over
+    * four eventDays. */
+  private def landCorpus(dir: Path): Unit =
+    Seq(0L until 130L, 130L until 260L).zipWithIndex.foreach { case (ids, k) =>
+      writeGz(dir, s"obj-$k.gz", ids.map(i => graft.queries.OcsfLake.line(i * 1000000L)))
+    }
+
+  test("fanOut, fanOutIdempotent and the stream land the same rows and files") {
+    import graft.ocsf.OcsfSink
+    val landing = Files.createTempDirectory("agree-landing")
+    landCorpus(landing)
+    val plain = Files.createTempDirectory("agree-plain")
+    val idem = Files.createTempDirectory("agree-idem")
+    val streamed = Files.createTempDirectory("agree-stream")
+    val ckpt = Files.createTempDirectory("agree-ckpt")
+    // AQE would coalesce this small fixture's write shuffle into one
+    // task, landing one file per day whatever the writer count; with
+    // coalescing off the file count shows how each path sized its writers
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      val clustered = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
+        graft.sources.FdrSource.load(spark, landing.toString).drop("raw")))
+      try {
+        assert(clustered.count() == 260L)
+        OcsfSink.fanOut(clustered, plain.toString, "us-east-1", "123456789012")
+        OcsfSink.fanOutIdempotent(clustered, idem.toString, "us-east-1",
+          "123456789012", runId = 0L)
+      } finally { clustered.unpersist(); () }
+      val q = EventStream.start(spark, landing.toString, streamed.toString,
+        ckpt.toString, "us-east-1", "123456789012", trigger = Trigger.AvailableNow())
+      q.awaitTermination(180000)
+      assert(q.exception.isEmpty, q.exception.toString)
+    } finally prev.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
+
+    val (rows, files) = layout(plain)
+    assert(rows.keySet.map(_._1) == graft.ocsf.OcsfMappings.routes.toSet)
+    assert(rows.keySet.map(_._2).size == 4, rows.keySet.toString)
+    assert(rows.values.sum == 260L)
+    assert(layout(idem) == ((rows, files)), "fanOutIdempotent diverged from fanOut")
+    assert(layout(streamed) == ((rows, files)), "the stream diverged from fanOut")
+  }
+
+  test("Manifest discovery commits the same rows as Listing") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val listed = Files.createTempDirectory("discovery-listing")
+    val announced = Files.createTempDirectory("discovery-manifest")
+    landCorpus(listed)
+    landCorpus(announced)
+    // the lander announces its objects in two notifications, as two
+    // publishes would
+    val dir = new HPath(announced.toString)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.sources.LandingLog.announce(fs, dir, Seq("obj-0.gz"), "lander")
+    graft.sources.LandingLog.announce(fs, dir, Seq("obj-1.gz"), "lander")
+    def drain(landing: Path, discovery: EventStream.Discovery): Path = {
+      val out = Files.createTempDirectory("discovery-out")
+      val q = EventStream.start(spark, landing.toString, out.toString,
+        Files.createTempDirectory("discovery-ckpt").toString, "us-east-1",
+        "123456789012", trigger = Trigger.AvailableNow(), discovery = discovery)
+      q.awaitTermination(180000)
+      assert(q.exception.isEmpty, q.exception.toString)
+      out
+    }
+    val viaListing = layout(drain(listed, EventStream.Listing))._1
+    val viaManifest = layout(drain(announced, EventStream.Manifest))._1
+    assert(viaListing.values.sum == 260L)
+    assert(viaManifest == viaListing)
+  }
+
   test("streaming compaction folds the commit log without disturbing the rows") {
     val landing = Files.createTempDirectory("stream-compact")
     val out     = Files.createTempDirectory("stream-compact-out")

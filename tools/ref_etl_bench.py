@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Times the REFERENCE loader's normalization throughput (events/sec).
 
-Feeds it the same line shapes graft.EtlBench uses, through the real
-ocsfQfdrMapper (AWS clients and sendToSqs stubbed to no-ops), i.e. the
-pure per-line CPU work the reference Lambda does between S3 read and
-SQS write. Run `runMain graft.EtlBench` for graft's end-to-end number
-(which additionally includes gz decompression AND the partitioned
-parquet fan-out write — a strictly larger scope).
+Feeds it the line shapes of graft's deterministic lake corpus
+(`graft.queries.OcsfLake.line`), through the real ocsfQfdrMapper (AWS
+clients and sendToSqs stubbed to no-ops), i.e. the pure per-line CPU
+work the reference Lambda does between S3 read and SQS write. For
+graft's end-to-end number run the benchmark's `etl_backfill` workload,
+`python3 perfbench/run.py --workload etl_backfill --seed 1 --seconds 2
+--trace 0`, which reports `etl_events_per_s` (it additionally includes
+gz decompression, classification AND the committed partitioned parquet
+fan-out — a strictly larger scope).
 
 Usage: ref_etl_bench.py [n_events]
 """
